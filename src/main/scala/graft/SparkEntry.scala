@@ -1446,6 +1446,47 @@ object SparkEntry {
 
   // -------------------------------------------------------------- queries
 
+  /** The `kcore_peel` graph: distinct customer→supplier purchase
+    * edges, supplier ids offset past every customer key.
+    */
+  private[graft] def kcoreEdges(s: SparkSession, dir: String): DataFrame =
+    T(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
+      .join(T(s, dir, "orders").select("o_orderkey", "o_custkey"),
+        col("l_orderkey") === col("o_orderkey"))
+      .select(col("o_custkey").as("src"),
+        (col("l_suppkey") + 1000000L).as("dst"))
+      .distinct()
+
+  /** The `scc_labels` / `scc_condensation` graph: the doubling map
+    * plus a chord family over customer keys mod 120.
+    */
+  private[graft] def sccEdges(s: SparkSession, dir: String): DataFrame = {
+    val nd = T(s, dir, "customer")
+      .select((col("c_custkey") % 120).as("v")).distinct()
+    val e1 = nd.select(col("v").as("src"),
+      ((col("v") * 2 + 1) % 120).as("dst"))
+    val e2 = nd.filter(col("v") % 4 === 0)
+      .select(col("v").as("src"), ((col("v") + 30) % 120).as("dst"))
+    e1.unionByName(e2)
+  }
+
+  /** The `bowtie_regions` graph: a 60-cycle core, 40 IN and 40 OUT
+    * tendrils, and a disconnected 10-cycle island — one edge per node
+    * in ONE projection (a union of four filtered branches pushed each
+    * filter below the distinct and ran four scan stages).
+    */
+  private[graft] def bowtieEdges(s: SparkSession, dir: String): DataFrame = {
+    val v = col("v")
+    val outT = v >= 100 && v < 140
+    T(s, dir, "customer").select((col("c_custkey") % 150).as("v"))
+      .distinct()
+      .select(when(outT, v - 100).otherwise(v).as("src"),
+        when(v < 60, (v + 7) % 60)
+          .when(v < 100, v - 60)
+          .when(outT, v)
+          .otherwise(lit(140) + (v - 140 + 1) % 10).as("dst"))
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // F1: clean_name regexp chain over a synthesized messy column.
     "f1_clean_name" -> ((s, dir) =>
@@ -3145,15 +3186,8 @@ object SparkEntry {
     // report their within-subgraph degrees — all exact integers, the
     // oracle unrolls the peel. Completes the graph suite next to
     // components, PageRank and the triangle census.
-    "kcore_peel" -> ((s, dir) => {
-      val edges = T(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-        .join(T(s, dir, "orders").select("o_orderkey", "o_custkey"),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("src"),
-          (col("l_suppkey") + 1000000L).as("dst"))
-        .distinct()
-      KCore.kcorePeel(edges, k = 30, rounds = 3)
-    }),
+    "kcore_peel" -> ((s, dir) =>
+      KCore.kcorePeel(kcoreEdges(s, dir), k = 30, rounds = 3)),
 
     // Triangle census over the supplier co-occurrence graph (suppliers
     // sharing an order) — degree-ordered compact-forward enumeration,
@@ -4920,15 +4954,8 @@ object SparkEntry {
     // pair table. The oracle recomputes mutual reachability by
     // recursive closure on the bounded fixture — result parity
     // without replaying the algorithm.
-    "scc_labels" -> ((s, dir) => {
-      val nd = T(s, dir, "customer")
-        .select((col("c_custkey") % 120).as("v")).distinct()
-      val e1 = nd.select(col("v").as("src"),
-        ((col("v") * 2 + 1) % 120).as("dst"))
-      val e2 = nd.filter(col("v") % 4 === 0)
-        .select(col("v").as("src"), ((col("v") + 30) % 120).as("dst"))
-      Scc.stronglyConnected(e1.unionByName(e2)).orderBy("node")
-    }),
+    "scc_labels" -> ((s, dir) =>
+      Scc.stronglyConnected(sccEdges(s, dir)).orderBy("node")),
 
     // The SCC condensation census over the same fixture graph —
     // per component: member count, condensation out-degree, and the
@@ -4938,15 +4965,8 @@ object SparkEntry {
     // frames; the oracle recomputes everything from the recursive
     // mutual-reach closure plus a recursive longest-path walk on the
     // (acyclic) condensation — ground truth by definition.
-    "scc_condensation" -> ((s, dir) => {
-      val nd = T(s, dir, "customer")
-        .select((col("c_custkey") % 120).as("v")).distinct()
-      val e1 = nd.select(col("v").as("src"),
-        ((col("v") * 2 + 1) % 120).as("dst"))
-      val e2 = nd.filter(col("v") % 4 === 0)
-        .select(col("v").as("src"), ((col("v") + 30) % 120).as("dst"))
-      Scc.condensation(e1.unionByName(e2)).orderBy("scc_id")
-    }),
+    "scc_condensation" -> ((s, dir) =>
+      Scc.condensation(sccEdges(s, dir)).orderBy("scc_id")),
 
     // Bowtie census (Broder et al. 2000) on a constructed four-region
     // graph: a 60-cycle core (gcd(7,60)=1 ⇒ one orbit), 40 IN
@@ -4955,21 +4975,8 @@ object SparkEntry {
     // reach sets grow by BFS with exact set-size certificates. The
     // oracle classifies from the full recursive closure — reach-to- /
     // reach-from-core by definition.
-    "bowtie_regions" -> ((s, dir) => {
-      val nd = T(s, dir, "customer")
-        .select((col("c_custkey") % 150).as("v")).distinct()
-      val core = nd.filter(col("v") < 60)
-        .select(col("v").as("src"), ((col("v") + 7) % 60).as("dst"))
-      val inT = nd.filter(col("v") >= 60 && col("v") < 100)
-        .select(col("v").as("src"), (col("v") - 60).as("dst"))
-      val outT = nd.filter(col("v") >= 100 && col("v") < 140)
-        .select((col("v") - 100).as("src"), col("v").as("dst"))
-      val isl = nd.filter(col("v") >= 140)
-        .select(col("v").as("src"),
-          (lit(140) + ((col("v") - 140 + 1) % 10)).as("dst"))
-      Scc.bowtie(core.unionByName(inT).unionByName(outT)
-        .unionByName(isl)).orderBy("node")
-    }),
+    "bowtie_regions" -> ((s, dir) =>
+      Scc.bowtie(bowtieEdges(s, dir)).orderBy("node")),
 
     // Reciprocity summary of the arithmetic functional graph
     // k%1000 → (3k+2)%1000 (chosen so loops AND mutual pairs both

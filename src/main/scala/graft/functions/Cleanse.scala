@@ -10,10 +10,11 @@ import org.apache.spark.sql.functions._
   * the pinned unit tables in `tests/test_utils.py:21-106`.
   *
   * Design: everything regex-expressible is a pure `Column` chain
-  * (whole-stage-codegen'd, no serialization boundary); only the two
+  * (whole-stage-codegen'd, no serialization boundary); the two
   * genuinely procedural functions (`fixWrappedName`, `normalizeWords`)
-  * are Scala UDFs, with the pure-Scala implementation exposed for unit
-  * tests and for driver-side header inference.
+  * are native Catalyst expressions over a pure-Scala implementation,
+  * which is also exposed for unit tests and driver-side header
+  * inference.
   *
   * All regexes carry the `(?U)` (UNICODE_CHARACTER_CLASS) flag so that
   * `\s`/`\d` match Unicode whitespace/digits exactly like Python's
@@ -104,13 +105,8 @@ object Cleanse {
     else tokens.mkString("")
   }
 
-  // ScalaUDF variants kept as the portable fallback; the default
-  // Column builders below use the native Catalyst expressions
-  // (NativeExpressions.scala) — same Scala semantics, but codegen'd
-  // without the ScalaUDF encoder/boxing layer.
-  val fixWrappedNameUdf = udf((s: String) => fixWrappedNameScala(s))
-  val normalizeWordsUdf = udf((s: String) => normalizeWordsScala(s))
-
+  // The procedural pair as native Catalyst expressions
+  // (NativeExpressions.scala): the Scala semantics above, codegen'd.
   def fixWrappedName(c: Column): Column = NativeExpressions.fixWrappedName(c)
   def normalizeWords(c: Column): Column = NativeExpressions.normalizeWords(c)
 
@@ -127,10 +123,6 @@ object Cleanse {
     */
   def cleanseIslandName(c: Column): Column =
     cleanName(fixWrappedName(coalesce(c, lit(""))))
-
-  /** Scala mirror of [[cleanseIslandName]]. */
-  def cleanseIslandNameScala(s: String): String =
-    cleanNameScala(fixWrappedNameScala(s))
 
   // ---- code-derived columns (`extractors.py:164-176,244-248,287-291`) ----
 

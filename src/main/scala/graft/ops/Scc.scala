@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType}
 
 /** Strongly connected components of a DIRECTED edge list — the
   * link-graph structure census [[Components]] cannot answer (it
@@ -47,6 +48,23 @@ import org.apache.spark.sql.functions._
   * not O(log). Size `maxInner` to the largest expected SCC diameter
   * (the certificate still guarantees exactness; too-small throws
   * rather than returning wrong labels).
+  *
+  * Driver-local finish: every operator first collects the distinct
+  * edge list in one bounded collect (`limit(maxLocalEdges + 1)`, see
+  * [[LocalEdges]]) and, when it fits, finishes in memory — an
+  * iterative Tarjan for the labels, longest-path layers over the
+  * component DAG in topological order for [[condensation]], and two
+  * BFS reach sets on that DAG for [[bowtie]] — returning a local
+  * frame with the same schema and rows and pinning no checkpoint
+  * blocks. The loops above are kilobyte-frame work priced entirely by
+  * job submission (~140 driver-synchronized jobs per scc_labels +
+  * kcore_peel pass); in memory they are milliseconds. Above
+  * `maxLocalEdges` (default [[LocalEdges.MaxLocalEdges]]; 0 forces the
+  * distributed path), or with a non-integral or null endpoint, the
+  * FW-BW rounds run unchanged. The local finish is exact, so
+  * `maxOuter`/`maxInner` bound only the distributed rounds; the
+  * `require`s and the `maxDepth` throws hold on both paths, for the
+  * same DAG depths.
   */
 object Scc {
 
@@ -87,9 +105,12 @@ object Scc {
     * nodes, and peel steps — the numbers that prove (or refute) the
     * "outer rounds scale with the SCC-DAG's peel depth" claim on a
     * DATA-SCALED graph, not just the oracle fixture (VERDICT r17
-    * missing #4).
+    * missing #4). `local` says the driver-local finish ran instead,
+    * so no rounds did — a zero round count is then not evidence about
+    * the distributed loop.
     */
-  case class SccStats(outerRounds: Int, trimLayers: Int, peelRounds: Int)
+  case class SccStats(
+      outerRounds: Int, trimLayers: Int, peelRounds: Int, local: Boolean)
 
   /** `(node, scc_id)` for every edge-incident node, `scc_id` = the
     * minimum member of the node's strongly connected component.
@@ -97,16 +118,43 @@ object Scc {
   def stronglyConnected(
       edges: DataFrame,
       maxOuter: Int = 16,
-      maxInner: Int = 30): DataFrame =
-    stronglyConnectedWithStats(edges, maxOuter, maxInner)._1
+      maxInner: Int = 30,
+      maxLocalEdges: Int = LocalEdges.MaxLocalEdges): DataFrame =
+    stronglyConnectedWithStats(edges, maxOuter, maxInner, maxLocalEdges)._1
 
   /** [[stronglyConnected]] plus its [[SccStats]] convergence record. */
   def stronglyConnectedWithStats(
       edges: DataFrame,
       maxOuter: Int = 16,
-      maxInner: Int = 30): (DataFrame, SccStats) = {
+      maxInner: Int = 30,
+      maxLocalEdges: Int = LocalEdges.MaxLocalEdges): (DataFrame, SccStats) = {
+    requireRounds(maxOuter, maxInner)
+    collectLocal(edges, maxLocalEdges) match {
+      case Some(g) =>
+        val (comp, _, rep) = tarjan(g)
+        val box = LocalEdges.boxId(g.idType)
+        val labels = LocalEdges.frame(edges.sparkSession,
+          Seq("node" -> g.idType, "scc_id" -> g.idType),
+          g.ids.indices.map(v =>
+            Row(box(g.ids(v)), box(g.ids(rep(comp(v)))))))
+        (labels, SccStats(0, 0, 0, local = true))
+      case None => distributedScc(edges, maxOuter, maxInner)
+    }
+  }
+
+  private def requireRounds(maxOuter: Int, maxInner: Int): Unit = {
     require(maxOuter >= 1, s"maxOuter must be >= 1, got $maxOuter")
     require(maxInner >= 1, s"maxInner must be >= 1, got $maxInner")
+  }
+
+  private def collectLocal(edges: DataFrame, maxLocalEdges: Int) =
+    LocalEdges.collect(edges.select(col("src"), col("dst")), maxLocalEdges)
+
+  /** The distributed trim + FW-BW peel rounds. */
+  private def distributedScc(
+      edges: DataFrame,
+      maxOuter: Int,
+      maxInner: Int): (DataFrame, SccStats) = {
     var active = edges.select(col("src"), col("dst")).distinct()
       .localCheckpoint(false)
     // the active NODE universe rides alongside the edges: removing a
@@ -241,7 +289,7 @@ object Scc {
         edges.select(col("src").as("node"), col("src").as("scc_id"))
           .limit(0)
       else done.reduce(_.unionByName(_))
-    (labels, SccStats(outer, trimLayers, peelRounds))
+    (labels, SccStats(outer, trimLayers, peelRounds, local = false))
   }
 
   /** The SCC condensation census — per component: member count,
@@ -267,9 +315,63 @@ object Scc {
       edges: DataFrame,
       maxOuter: Int = 16,
       maxInner: Int = 30,
-      maxDepth: Int = 60): DataFrame = {
+      maxDepth: Int = 60,
+      maxLocalEdges: Int = LocalEdges.MaxLocalEdges): DataFrame = {
     require(maxDepth >= 1, s"maxDepth must be >= 1, got $maxDepth")
-    val labels = stronglyConnected(edges, maxOuter, maxInner)
+    requireRounds(maxOuter, maxInner)
+    collectLocal(edges, maxLocalEdges) match {
+      case Some(g) => localCondensation(edges, g, maxDepth)
+      case None => distributedCondensation(edges, maxOuter, maxInner,
+        maxDepth)
+    }
+  }
+
+  /** [[condensation]] over the collected graph: Tarjan numbers the
+    * components in reverse topological order, so one sweep over the
+    * component edges from the highest source down settles every
+    * longest-path layer. The relaxation loop converges at round
+    * max(depth + 1, 2), so exactly the depths that exhaust `maxDepth`
+    * there throw here.
+    */
+  private def localCondensation(
+      edges: DataFrame,
+      g: LocalEdges.Edges,
+      maxDepth: Int): DataFrame = {
+    val (comp, nc, rep) = tarjan(g)
+    val (cs, cd) = componentEdges(g, comp)
+    val size = new Array[Long](nc)
+    comp.foreach(c => size(c) += 1)
+    val nOut = new Array[Long](nc)
+    cs.foreach(c => nOut(c) += 1)
+    val layer = new Array[Long](nc)
+    var i = cs.length - 1
+    while (i >= 0) {
+      layer(cd(i)) = math.max(layer(cd(i)), layer(cs(i)) + 1)
+      i -= 1
+    }
+    val depth = if (nc == 0) 0L else layer.max
+    if (math.max(depth + 1, 2) > maxDepth)
+      throw condensationTooDeep(maxDepth)
+    val box = LocalEdges.boxId(g.idType)
+    LocalEdges.frame(edges.sparkSession,
+      Seq("scc_id" -> g.idType, "n_nodes" -> LongType, "n_out" -> LongType,
+        "layer" -> LongType),
+      (0 until nc).map(c =>
+        Row(box(g.ids(rep(c))), size(c), nOut(c), layer(c))))
+  }
+
+  private def condensationTooDeep(maxDepth: Int) =
+    new IllegalStateException(
+      s"condensation layers did not converge in $maxDepth round(s) " +
+        "— the condensation DAG is deeper than maxDepth (or the " +
+        "edge source is non-deterministic); raise maxDepth")
+
+  private def distributedCondensation(
+      edges: DataFrame,
+      maxOuter: Int,
+      maxInner: Int,
+      maxDepth: Int): DataFrame = {
+    val labels = distributedScc(edges, maxOuter, maxInner)._1
     // eager checkpoints: sizes and the component edges materialize off
     // labels' live blocks BEFORE those blocks are freed
     val sizes = labels.groupBy(col("scc_id"))
@@ -328,10 +430,7 @@ object Scc {
     }
     if (!converged) {
       CheckpointUtil.free(layer, sizes, ce)
-      throw new IllegalStateException(
-        s"condensation layers did not converge in $maxDepth round(s) " +
-          "— the condensation DAG is deeper than maxDepth (or the " +
-          "edge source is non-deterministic); raise maxDepth")
+      throw condensationTooDeep(maxDepth)
     }
     val out = sizes
       .join(outDeg, Seq("scc_id"), "left")
@@ -365,9 +464,63 @@ object Scc {
       edges: DataFrame,
       maxOuter: Int = 16,
       maxInner: Int = 30,
-      maxDepth: Int = 60): DataFrame = {
+      maxDepth: Int = 60,
+      maxLocalEdges: Int = LocalEdges.MaxLocalEdges): DataFrame = {
     require(maxDepth >= 1, s"maxDepth must be >= 1, got $maxDepth")
-    val labels = stronglyConnected(edges, maxOuter, maxInner)
+    requireRounds(maxOuter, maxInner)
+    collectLocal(edges, maxLocalEdges) match {
+      case Some(g) => localBowtie(edges, g, maxDepth)
+      case None => distributedBowtie(edges, maxOuter, maxInner, maxDepth)
+    }
+  }
+
+  /** [[bowtie]] over the collected graph: the IN and OUT sets are BFS
+    * reach sets from the giant over the reversed and forward component
+    * edges. The tagged BFS loop converges at round d + 1 for the
+    * larger BFS depth d of the two sides, so exactly the depths that
+    * exhaust `maxDepth` there throw here.
+    */
+  private def localBowtie(
+      edges: DataFrame,
+      g: LocalEdges.Edges,
+      maxDepth: Int): DataFrame = {
+    val (comp, nc, rep) = tarjan(g)
+    val (cs, cd) = componentEdges(g, comp)
+    val size = new Array[Long](nc)
+    comp.foreach(c => size(c) += 1)
+    // largest component, ties to the smaller scc_id (rep ascends with it)
+    var giant = -1
+    var c = 0
+    while (c < nc) {
+      if (giant < 0 || size(c) > size(giant) ||
+          (size(c) == size(giant) && rep(c) < rep(giant))) giant = c
+      c += 1
+    }
+    val (inSet, inDepth) = reach(nc, cd, cs, giant)
+    val (outSet, outDepth) = reach(nc, cs, cd, giant)
+    if (math.max(inDepth, outDepth) + 1 > maxDepth)
+      throw bowtieTooDeep(maxDepth)
+    val region = Array.tabulate(nc) { c =>
+      if (c == giant) "core" else if (inSet(c)) "in"
+      else if (outSet(c)) "out" else "other"
+    }
+    val box = LocalEdges.boxId(g.idType)
+    LocalEdges.frame(edges.sparkSession,
+      Seq("node" -> g.idType, "region" -> StringType),
+      g.ids.indices.map(v => Row(box(g.ids(v)), region(comp(v)))))
+  }
+
+  private def bowtieTooDeep(maxDepth: Int) =
+    new IllegalStateException(
+      s"bowtie reach set still growing after $maxDepth round(s) — " +
+        "condensation deeper than maxDepth; raise it")
+
+  private def distributedBowtie(
+      edges: DataFrame,
+      maxOuter: Int,
+      maxInner: Int,
+      maxDepth: Int): DataFrame = {
+    val labels = distributedScc(edges, maxOuter, maxInner)._1
     val sizes = labels.groupBy(col("scc_id"))
       .agg(count(lit(1)).as("n_nodes"))
       .localCheckpoint()
@@ -426,9 +579,7 @@ object Scc {
     }
     if (n != prevN) {
       CheckpointUtil.free(r, tagged, sizes, giant, ce, labels)
-      throw new IllegalStateException(
-        s"bowtie reach set still growing after $maxDepth round(s) — " +
-          "condensation deeper than maxDepth; raise it")
+      throw bowtieTooDeep(maxDepth)
     }
     val inSet = r.filter(col("side") === 0).select(col("scc_id"))
     val outSet = r.filter(col("side") === 1).select(col("scc_id"))
@@ -447,6 +598,114 @@ object Scc {
       .localCheckpoint()
     CheckpointUtil.free(labels, sizes, giant, ce, tagged, r)
     out
+  }
+
+  /** Tarjan's SCC algorithm on the collected graph with an explicit
+    * call stack (a long path cannot overflow the driver thread's
+    * stack). Returns `(comp, nComp, rep)`: `comp(v)` numbers components
+    * in completion order — a REVERSE topological order of the
+    * condensation, so every component edge runs from a higher number to
+    * a lower one — and `rep(c)` is component c's minimum member (dense
+    * indices ascend with node ids).
+    */
+  private def tarjan(g: LocalEdges.Edges): (Array[Int], Int, Array[Int]) = {
+    val n = g.nodes
+    val (off, adj) = LocalEdges.csr(n, g.src, g.dst)
+    val index = Array.fill(n)(-1)
+    val low = new Array[Int](n)
+    val comp = Array.fill(n)(-1)
+    val next = new Array[Int](n) // each open call's next edge
+    val calls = new Array[Int](n)
+    val stack = new Array[Int](n)
+    var depth = 0
+    var sp = 0
+    var counter = 0
+    var nComp = 0
+    def open(v: Int): Unit = {
+      index(v) = counter
+      low(v) = counter
+      counter += 1
+      next(v) = off(v)
+      stack(sp) = v
+      sp += 1
+      calls(depth) = v
+      depth += 1
+    }
+    var root = 0
+    while (root < n) {
+      if (index(root) < 0) open(root)
+      while (depth > 0) {
+        val v = calls(depth - 1)
+        if (next(v) < off(v + 1)) {
+          val w = adj(next(v))
+          next(v) += 1
+          if (index(w) < 0) open(w)
+          // visited but unassigned ⇔ still on the Tarjan stack
+          else if (comp(w) < 0) low(v) = math.min(low(v), index(w))
+        } else {
+          depth -= 1
+          if (low(v) == index(v)) {
+            var w = -1
+            while (w != v) {
+              sp -= 1
+              w = stack(sp)
+              comp(w) = nComp
+            }
+            nComp += 1
+          }
+          if (depth > 0) {
+            val u = calls(depth - 1)
+            low(u) = math.min(low(u), low(v))
+          }
+        }
+      }
+      root += 1
+    }
+    val rep = Array.fill(nComp)(-1)
+    var v = 0
+    while (v < n) {
+      if (rep(comp(v)) < 0) rep(comp(v)) = v
+      v += 1
+    }
+    (comp, nComp, rep)
+  }
+
+  /** The distinct cross-component edges `(from, to)`, sorted by
+    * `(from, to)` — the condensation DAG.
+    */
+  private def componentEdges(
+      g: LocalEdges.Edges, comp: Array[Int]): (Array[Int], Array[Int]) = {
+    val packed = g.src.indices.iterator
+      .map(e => (comp(g.src(e)), comp(g.dst(e))))
+      .collect { case (a, b) if a != b => (a.toLong << 32) | b }
+      .toArray
+    java.util.Arrays.sort(packed)
+    val pairs = packed.distinct
+    (pairs.map(p => (p >>> 32).toInt), pairs.map(p => p.toInt))
+  }
+
+  /** Vertices of `n` reachable from `start` along `from → to` edges,
+    * and the largest BFS distance among them.
+    */
+  private def reach(
+      n: Int,
+      from: Array[Int],
+      to: Array[Int],
+      start: Int): (Array[Boolean], Int) = {
+    val seen = new Array[Boolean](n)
+    if (start < 0) return (seen, 0)
+    val (off, adj) = LocalEdges.csr(n, from, to)
+    var frontier = Array(start)
+    seen(start) = true
+    var dist = 0
+    while (frontier.nonEmpty) {
+      val grown = frontier.flatMap(v => adj.slice(off(v), off(v + 1)))
+        .filter(w => !seen(w)).distinct
+      grown.foreach(w => seen(w) = true)
+      if (grown.nonEmpty) dist += 1
+      frontier = grown
+    }
+    (seen, dist)
   }
 
   /** Min label over (ancestors ∪ self) along edge direction, to the

@@ -11,6 +11,9 @@ import graft.ops.{EventOps, Hits, KCore, LabelProp, PageRank, Scc}
   * counts grow with the scale factor and whose peel depth is the `q`
   * dial — and print one JSON line per q with the measured outer
   * rounds (which must equal q by construction) and warm wall times.
+  * Every operator runs with `maxLocalEdges = 0`: this tool measures
+  * the DISTRIBUTED rounds, which the driver-local finish would
+  * otherwise replace on graphs this small.
   *
   * Usage: RunGraphScale <events.parquet> <q,q,...>
   */
@@ -55,7 +58,8 @@ object RunGraphScale {
         val t0 = System.nanoTime()
         val (labels, stats) =
           Scc.stronglyConnectedWithStats(edges, maxOuter = q + 2,
-            maxInner = 256)
+            maxInner = 256, maxLocalEdges = 0)
+        require(!stats.local, "the distributed rounds did not run")
         val nSccs = labels.select(countDistinct(col("scc_id"))).head()
           .getLong(0)
         graft.ops.CheckpointUtil.free(labels)
@@ -65,13 +69,13 @@ object RunGraphScale {
       val (nSccs, stats, sccS) = sccRun()
       val t1 = System.nanoTime()
       val cond = Scc.condensation(edges, maxOuter = q + 2,
-        maxInner = 256, maxDepth = 4 * q + 8)
+        maxInner = 256, maxDepth = 4 * q + 8, maxLocalEdges = 0)
       val maxLayer = cond.agg(max(col("layer"))).head().getLong(0)
       graft.ops.CheckpointUtil.free(cond)
       val condS = (System.nanoTime() - t1) / 1e9
       val t2 = System.nanoTime()
       val bt = Scc.bowtie(edges, maxOuter = q + 2, maxInner = 256,
-        maxDepth = 4 * q + 8)
+        maxDepth = 4 * q + 8, maxLocalEdges = 0)
       bt.write.format("noop").mode("overwrite").save()
       val btS = (System.nanoTime() - t2) / 1e9
       // scalastyle:off println
@@ -146,7 +150,8 @@ object RunGraphScale {
         // k=4 keeps a nontrivial bipartite core (orders carry ~4-7
         // distinct suppliers; k=30 would peel every order in round 1)
         ("kcore_peel", r, () =>
-          KCore.kcorePeel(directed, k = 4, rounds = r).count()),
+          KCore.kcorePeel(directed, k = 4, rounds = r,
+            maxLocalEdges = 0).count()),
         ("hits_scores", hitsRounds, () =>
           Hits.hitsFixed(directed, rounds = hitsRounds).count()))
       runs.foreach { case (name, effRounds, body) =>

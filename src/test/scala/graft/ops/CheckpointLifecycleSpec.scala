@@ -47,11 +47,24 @@ class CheckpointLifecycleSpec extends SparkSpec {
     }
   }
 
+  private def tri = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L))
+    .toDF("src", "dst")
+
   test("kcorePeel pins only the final edge frame") {
-    val tri = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L))
-      .toDF("src", "dst")
     assertLifecycle(finalFrames = 1) {
-      KCore.kcorePeel(tri, k = 2, rounds = 3)
+      KCore.kcorePeel(tri, k = 2, rounds = 3, maxLocalEdges = 0)
+    }
+  }
+
+  // the driver-local finish returns a local frame: nothing stays pinned
+  Seq[(String, () => DataFrame)](
+    "kcorePeel" -> (() => KCore.kcorePeel(tri, k = 2, rounds = 3)),
+    "stronglyConnected" -> (() => Scc.stronglyConnected(edges)),
+    "condensation" -> (() => Scc.condensation(edges)),
+    "bowtie" -> (() => Scc.bowtie(edges))
+  ).foreach { case (name, op) =>
+    test(s"$name's driver-local finish pins no frame") {
+      assertLifecycle(finalFrames = 0)(op())
     }
   }
 

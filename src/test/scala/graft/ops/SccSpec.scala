@@ -1,16 +1,23 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.max
+import org.apache.spark.sql.types.{DataType, IntegerType}
 
 /** Hand-computed SCC fixtures: cycles, DAG periphery, bridges between
-  * cycles, self-loops, and the trim/peel interplay.
+  * cycles, self-loops, and the trim/peel interplay. Every fixture runs
+  * on BOTH finishes — the driver-local default and the distributed
+  * rounds forced by `maxLocalEdges = 0` — and the two must agree.
   */
 class SccSpec extends SparkSpec {
   import graft.SparkTestSession.spark.implicits._
+  import SccSpec._
 
-  private def scc(edges: (Long, Long)*): Map[Long, Long] =
-    Scc.stronglyConnected(edges.toDF("src", "dst"))
+  private def scc(edges: (Long, Long)*): Map[Long, Long] = bothPaths { b =>
+    Scc.stronglyConnected(edges.toDF("src", "dst"), maxLocalEdges = b)
       .as[(Long, Long)].collect().toMap
+  }
 
   test("a cycle is one SCC labeled by its minimum member") {
     assert(scc(5L -> 6L, 6L -> 7L, 7L -> 5L) ==
@@ -52,8 +59,8 @@ class SccSpec extends SparkSpec {
     // 6 → A → B → 7 with layers 0,1,2,3
     val edges = Seq(1L -> 2L, 2L -> 3L, 3L -> 1L, 3L -> 4L,
       4L -> 5L, 5L -> 4L, 6L -> 1L, 5L -> 7L).toDF("src", "dst")
-    val got = Scc.condensation(edges)
-      .as[(Long, Long, Long, Long)].collect().toSet
+    val got = bothPaths(b => Scc.condensation(edges, maxLocalEdges = b)
+      .as[(Long, Long, Long, Long)].collect().toSet)
     assert(got == Set(
       (1L, 3L, 1L, 1L),   // cycle A: 3 nodes, out-edge to B, layer 1
       (4L, 2L, 1L, 2L),   // cycle B: 2 nodes, out-edge to 7, layer 2
@@ -68,8 +75,8 @@ class SccSpec extends SparkSpec {
     // same component pair would collapse — here duplicate edges do)
     val edges = Seq(1L -> 2L, 2L -> 3L, 3L -> 4L, 1L -> 4L, 1L -> 4L)
       .toDF("src", "dst")
-    val got = Scc.condensation(edges)
-      .as[(Long, Long, Long, Long)].collect().toSet
+    val got = bothPaths(b => Scc.condensation(edges, maxLocalEdges = b)
+      .as[(Long, Long, Long, Long)].collect().toSet)
     assert(got == Set((1L, 1L, 2L, 0L), (2L, 1L, 1L, 1L),
       (3L, 1L, 1L, 2L), (4L, 1L, 0L, 3L)), got.toString)
   }
@@ -80,8 +87,8 @@ class SccSpec extends SparkSpec {
     // 3 → 7 tendril (reaches IN but never core's row — other)
     val edges = Seq(1L -> 2L, 2L -> 1L, 3L -> 1L, 2L -> 4L,
       5L -> 6L, 6L -> 5L, 3L -> 7L).toDF("src", "dst")
-    val got = Scc.bowtie(edges)
-      .as[(Long, String)].collect().toMap
+    val got = bothPaths(b => Scc.bowtie(edges, maxLocalEdges = b)
+      .as[(Long, String)].collect().toMap)
     assert(got == Map(1L -> "core", 2L -> "core", 3L -> "in",
       4L -> "out", 5L -> "other", 6L -> "other", 7L -> "other"),
       got.toString)
@@ -91,7 +98,8 @@ class SccSpec extends SparkSpec {
     // two 2-cycles, no path between: {1,2} wins the tie over {3,4}
     val edges = Seq(1L -> 2L, 2L -> 1L, 3L -> 4L, 4L -> 3L)
       .toDF("src", "dst")
-    val got = Scc.bowtie(edges).as[(Long, String)].collect().toMap
+    val got = bothPaths(b => Scc.bowtie(edges, maxLocalEdges = b)
+      .as[(Long, String)].collect().toMap)
     assert(got == Map(1L -> "core", 2L -> "core",
       3L -> "other", 4L -> "other"), got.toString)
   }
@@ -103,17 +111,7 @@ class SccSpec extends SparkSpec {
     val edges = vs.map(v => v -> ((v * 2 + 1) % 40)) ++
       vs.filter(_ % 4 == 0).map(v => v -> ((v + 10) % 40))
     val got = scc(edges: _*)
-    // reference: Floyd-Warshall reachability on the driver
-    val n = 40
-    val reach = Array.fill(n, n)(false)
-    vs.foreach(v => reach(v.toInt)(v.toInt) = true)
-    edges.foreach { case (a, b) => reach(a.toInt)(b.toInt) = true }
-    for (k <- 0 until n; i <- 0 until n; j <- 0 until n)
-      if (reach(i)(k) && reach(k)(j)) reach(i)(j) = true
-    val expect = vs.map { v =>
-      v -> (0 until n).filter(m =>
-        reach(v.toInt)(m) && reach(m)(v.toInt)).min.toLong
-    }.toMap
+    val expect = bruteForceScc(edges)
     assert(got == expect,
       s"diff: ${(got.toSet -- expect.toSet) ++ (expect.toSet -- got.toSet)}")
   }
@@ -143,9 +141,12 @@ class SccSpec extends SparkSpec {
     // fixture accident; 256 matches RunGraphScale and survives a
     // regenerated, heavier events table
     val (labels, stats) = Scc.stronglyConnectedWithStats(
-      edges, maxInner = 256)
+      edges, maxInner = 256, maxLocalEdges = 0)
     val got = labels.as[(Long, Long)].collect().toMap
     CheckpointUtil.free(labels)
+    val (local, localStats) = Scc.stronglyConnectedWithStats(edges)
+    assert(localStats.local && !stats.local, (localStats, stats).toString)
+    assert(local.as[(Long, Long)].collect().toMap == got)
     // independent prediction: node -> min node of its (user, seg),
     // via the same window ranking but NO graph machinery
     val w = Window.partitionBy(col("user_id"))
@@ -170,8 +171,117 @@ class SccSpec extends SparkSpec {
       stats.outerRounds == q, stats.toString)
     // and the q dial moves the round count 1:1 (peel-depth scaling)
     val (l7, s7) = Scc.stronglyConnectedWithStats(
-      EventOps.segmentCycleGraph(events, 7), maxInner = 256)
+      EventOps.segmentCycleGraph(events, 7), maxInner = 256,
+      maxLocalEdges = 0)
     CheckpointUtil.free(l7)
     assert(s7.peelRounds == 7 && s7.outerRounds == 7, s7.toString)
   }
+
+  test("registry edge sets at sf0.001 and sf0.01: the local finish " +
+      "matches the distributed rounds and brute-force reachability") {
+    for (sf <- Seq("sf0.001", "sf0.01")) {
+      val dir = s"/root/testdata/$sf"
+      val sccE = graft.SparkEntry.sccEdges(spark, dir)
+      val bowE = graft.SparkEntry.bowtieEdges(spark, dir)
+      val labels = bothPaths(b => rows(Scc.stronglyConnected(sccE,
+        maxLocalEdges = b)))
+      val expect = bruteForceScc(sccE.as[(Long, Long)].collect().toSeq)
+      assert(labels._2 == expect.map { case (v, m) => Seq[Any](v, m) }
+        .toSet, sf)
+      bothPaths(b => rows(Scc.condensation(sccE, maxLocalEdges = b)))
+      val regions = bothPaths(b => rows(Scc.bowtie(bowE,
+        maxLocalEdges = b)))
+      // 60 core + 40 in + 40 out + 10 island nodes
+      assert(regions._2.groupBy(_(1)).map { case (r, v) => r -> v.size } ==
+        Map("core" -> 60, "in" -> 40, "out" -> 40, "other" -> 10), sf)
+    }
+  }
+
+  test("degenerate inputs agree on both paths: empty, null endpoint, " +
+      "self-loops with duplicates, integer-typed ids") {
+    val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
+    for (op <- ops) {
+      val (schema, got) = bothPaths(b => rows(op(empty, b)))
+      assert(got.isEmpty && schema.nonEmpty, schema.toString)
+    }
+    val withNull = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (Some(2L), Some(1L)), (Some(2L), None),
+      (Some(3L), Some(1L))).toDF("src", "dst")
+    val loops = Seq(1L -> 1L, 1L -> 2L, 1L -> 2L, 2L -> 1L, 2L -> 2L,
+      2L -> 3L, 3L -> 3L, 2L -> 3L).toDF("src", "dst")
+    val ints = Seq(1 -> 2, 2 -> 3, 3 -> 1, 3 -> 4).toDF("src", "dst")
+    for (op <- ops; df <- Seq(loops, ints)) {
+      val (schema, got) = bothPaths(b => rows(op(df, b)))
+      assert(got.nonEmpty, schema.toString)
+    }
+    // a null endpoint falls back to the distributed rounds, which never
+    // retire the null node: both paths fail the same way
+    for (op <- ops; b <- Bounds) {
+      val e = intercept[IllegalStateException](op(withNull, b))
+      assert(e.getMessage.startsWith("scc did not converge"), e.getMessage)
+    }
+    assert(bothPaths(b => rows(Scc.stronglyConnected(loops,
+      maxLocalEdges = b)))._2 == Set(Seq(1L, 1L), Seq(2L, 1L), Seq(3L, 3L)))
+    assert(rows(Scc.stronglyConnected(ints))._1 ==
+      Seq("node" -> IntegerType, "scc_id" -> IntegerType))
+  }
+
+  test("maxDepth boundary: a 6-edge chain throws at maxDepth = 6 and " +
+      "passes at 7, on both paths") {
+    val chain = (1L to 6L).map(v => v -> (v + 1)).toDF("src", "dst")
+    for (b <- Bounds) {
+      intercept[IllegalStateException] {
+        Scc.condensation(chain, maxDepth = 6, maxLocalEdges = b)
+      }
+      intercept[IllegalStateException] {
+        Scc.bowtie(chain, maxDepth = 6, maxLocalEdges = b)
+      }
+      assert(Scc.condensation(chain, maxDepth = 7, maxLocalEdges = b)
+        .agg(max("layer")).head()
+        .getLong(0) == 6L)
+      assert(Scc.bowtie(chain, maxDepth = 7, maxLocalEdges = b)
+        .filter($"region" === "out").count() == 6L)
+      // maxDepth = 1 can never certify a fixpoint for the layers
+      intercept[IllegalStateException] {
+        Scc.condensation(Seq(1L -> 1L).toDF("src", "dst"), maxDepth = 1,
+          maxLocalEdges = b)
+      }
+    }
+  }
+
+  private val ops: Seq[(DataFrame, Int) => DataFrame] = Seq(
+    (e, b) => Scc.stronglyConnected(e, maxLocalEdges = b),
+    (e, b) => Scc.condensation(e, maxLocalEdges = b),
+    (e, b) => Scc.bowtie(e, maxLocalEdges = b))
+
+  /** Min-member SCC labels by Floyd-Warshall reachability. */
+  private def bruteForceScc(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val ids = edges.flatMap(e => Seq(e._1, e._2)).distinct.sorted
+    val ix = ids.zipWithIndex.toMap
+    val n = ids.size
+    val reach = Array.tabulate(n, n)(_ == _)
+    edges.foreach { case (a, b) => reach(ix(a))(ix(b)) = true }
+    for (k <- 0 until n; i <- 0 until n; j <- 0 until n)
+      if (reach(i)(k) && reach(k)(j)) reach(i)(j) = true
+    ids.indices.map(v => ids(v) ->
+      ids((0 until n).filter(m => reach(v)(m) && reach(m)(v)).min)).toMap
+  }
+}
+
+object SccSpec {
+  /** The driver-local default, then the distributed rounds. */
+  val Bounds: Seq[Int] = Seq(LocalEdges.MaxLocalEdges, 0)
+
+  /** `f` on both finishes; asserts they agree and returns the value. */
+  def bothPaths[T](f: Int => T): T = {
+    val Seq(local, distributed) = Bounds.map(f)
+    assert(local == distributed,
+      s"local finish:\n$local\ndistributed rounds:\n$distributed")
+    local
+  }
+
+  /** A frame's (name, type) schema and its row set. */
+  def rows(df: DataFrame): (Seq[(String, DataType)], Set[Seq[Any]]) =
+    (df.schema.map(f => f.name -> f.dataType),
+      df.collect().map(_.toSeq).toSet)
 }
